@@ -39,10 +39,16 @@ def _lineage_path(root: str) -> str:
 
 
 def read_lineage(spark: SparkSession, root: str) -> DataFrame:
-    try:
-        return spark.read.parquet(_lineage_path(root))
-    except Exception:
-        return spark.createDataFrame([], LINEAGE_SCHEMA)
+    """The lineage rows under ``root``; empty when there are none yet.
+
+    Only a missing path or a directory without data files means "no
+    lineage" (``materialize._read_prior``'s rule). Any other read error
+    re-raises: treating a transient or corrupt read as empty would make
+    the caller silently re-run every completed stage."""
+    from openalex_neo4j_spark.materialize import _read_prior
+
+    lin = _read_prior(spark, _lineage_path(root))
+    return spark.createDataFrame([], LINEAGE_SCHEMA) if lin is None else lin
 
 
 def append_lineage(spark: SparkSession, root: str, rows: list[tuple]) -> None:

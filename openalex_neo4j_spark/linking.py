@@ -217,6 +217,8 @@ def link_mentions(mentions: DataFrame) -> DataFrame:
             F.min("publication_year").alias("gyear"),
         )
     )
+    # lazy ckpt: under AQE the grouping shuffle still runs at call time
+    # (session.ckpt); the final aggregate stage folds into _counts below
     grp = ckpt(grp, eager=False)
 
     # one driver round-trip answers both "any orphans?" and the
@@ -279,19 +281,20 @@ def link_mentions(mentions: DataFrame) -> DataFrame:
         # paid a 3-stage semi/anti-join chain here to drop
         # both-canonical pairs; the filter was provably empty.)
         # checkpoint: cand feeds cand_tids, the scoring join, and the
-        # year filter -- without this the LSH banding DAG re-executes
+        # year filter -- without this the LSH banding DAG re-executes.
+        # Under AQE the band self-join and distinct shuffles run here,
+        # at call time; only the final distinct stage is deferred.
         cand = ckpt(cand, eager=False)
 
         # (4) TF-IDF cosine over candidate title pairs (only longs +
         # doubles move through the scoring shuffles).
         # ONE reference to the lazily-checkpointed cand plan (explode
         # of both endpoints), not a union of two selects: the first
-        # consuming job (the eager weights ckpt below) is what
-        # materializes cand, and two references there would both
-        # recompute parts of the band self-join (block population is
-        # first-writer-wins, uncoordinated) and open the
-        # doCheckpoint/getCacheLocs lock-inversion window
-        # (session.ckpt docstring).
+        # consuming job (the eager weights ckpt below) is what runs
+        # cand's deferred final stage, and two references there would
+        # both compute it (block population is first-writer-wins,
+        # uncoordinated) and open the doCheckpoint/getCacheLocs
+        # lock-inversion window (session.ckpt docstring).
         cand_tids = (
             cand.select(F.explode(F.array("ta", "tb")).alias("tid"))
             .distinct()

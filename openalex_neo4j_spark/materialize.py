@@ -19,6 +19,7 @@ would do on Iceberg — swap `_write` to switch).
 
 from __future__ import annotations
 
+import functools
 import os
 import shutil
 import time
@@ -27,6 +28,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from openalex_neo4j_spark.pipeline import GraphTables
+from openalex_neo4j_spark.session import run_concurrently
 
 
 def _read_prior(spark: SparkSession, path: str) -> DataFrame | None:
@@ -137,12 +139,10 @@ def upsert_nodes(spark: SparkSession, path: str, new_df: DataFrame,
         .filter(F.col("_rn") == 1)
         .drop("_rn", "_gen")
     )
-    staged = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
     # the staged write reads the old table lazily — the live dir is
-    # untouched until the rename below
-    result.write.mode("overwrite").parquet(staged)
-    _commit_table(staged, path)
-    return spark.read.parquet(path)
+    # untouched until the rename-commit
+    _staged_overwrite(result, path)
+    return _read_back(result, path)
 
 
 def _staged_overwrite(df: DataFrame, path: str,
@@ -157,6 +157,22 @@ def _staged_overwrite(df: DataFrame, path: str,
         w = w.partitionBy(*partition_by)
     w.parquet(staged)
     _commit_table(staged, path)
+
+
+def _read_back(df: DataFrame, path: str) -> DataFrame:
+    """The table just written from ``df`` at ``path``, scanned with
+    ``df``'s schema (as ``session.stage_parquet`` does): an inferring
+    ``spark.read.parquet(path)`` submits a footer-inference job of its
+    own, and an empty partitioned table has no files to infer from."""
+    return df.sparkSession.read.schema(df.schema).parquet(path)
+
+
+def _overwrite_and_count(df: DataFrame, path: str,
+                         partition_by: list[str] | None = None) -> int:
+    """One commit of a wave: staged overwrite, then the committed row
+    count."""
+    _staged_overwrite(df, path, partition_by)
+    return _read_back(df, path).count()
 
 
 def merge_graph(g: GraphTables, root: str,
@@ -191,62 +207,92 @@ def merge_graph(g: GraphTables, root: str,
     re-evaluated against the historical corpus — linking is per-import,
     the same boundary the reference has (it never re-links previously
     imported records either).
+
+    Commit order: three concurrent waves (``session.run_concurrently``),
+    each finished before the next starts.
+
+    1. The 7 node upserts and the edge set-union.
+    2. After ``enrich_node_counts`` eagerly checkpoints the refreshed
+       Work: the 4 count-refresh overwrites (Work, Author, Source,
+       Publisher) and, with ``with_search_indexes``, ``index_fulltext``,
+       built from that checkpoint.
+    3. The triples rewrite and the row counts of the tables wave 2 did
+       not rewrite.
+
+    Safety condition, per wave: no wave starts while a checkpoint its
+    jobs share is unmaterialized (the node tables of ``g`` come from
+    ``build_graph_from_linked`` materialized, and the refreshed Work is
+    checkpointed eagerly before wave 2), and no thread reads a path
+    that another thread of its wave replaces (each upsert and refresh
+    reads only its own table; the index never reads ``nodes_work``).
+    Every commit is a staged write plus rename, so a failed action
+    leaves its table at the previous version; the wave still lets its
+    other commits finish before the first error is raised, and
+    re-running the merge converges (upserts are last-wins, the edge
+    merge is a set union, the refreshes recompute from merged edges).
     """
     spark = g.edges.sparkSession
     from openalex_neo4j_spark.pipeline import (build_triples,
                                                enrich_node_counts)
 
     t0 = time.time()
-    counts: dict[str, int] = {}
+    paths = {label: f"{root}/nodes_{label.lower()}" for label in g.nodes}
+    paths.update(edges=f"{root}/edges", triples=f"{root}/triples",
+                 index_fulltext=f"{root}/index_fulltext")
 
-    merged: dict[str, DataFrame] = {}
-    for label, df in g.nodes.items():
-        merged[label] = upsert_nodes(
-            spark, f"{root}/nodes_{label.lower()}", df)
+    def merge_edges() -> DataFrame:
+        _recover_table(paths["edges"])
+        old_e = _read_prior(spark, paths["edges"])
+        new_e = g.edges.select("subj", "pred", "obj")
+        all_e = (new_e if old_e is None
+                 else old_e.select("subj", "pred", "obj").unionByName(new_e)
+                 .dropDuplicates(["subj", "pred", "obj"]))
+        _staged_overwrite(all_e, paths["edges"], partition_by=["pred"])
+        return _read_back(all_e, paths["edges"])
 
-    epath = f"{root}/edges"
-    _recover_table(epath)
-    old_e = _read_prior(spark, epath)
-    if old_e is not None:
-        old_e = old_e.select("subj", "pred", "obj")
-    new_e = g.edges.select("subj", "pred", "obj")
-    all_e = (new_e if old_e is None
-             else old_e.unionByName(new_e)
-             .dropDuplicates(["subj", "pred", "obj"]))
-    _staged_overwrite(all_e, epath, partition_by=["pred"])
-    edges = spark.read.parquet(epath).select("subj", "pred", "obj")
-    counts["edges"] = edges.count()
+    # wave 1: node upserts and the edge set-union
+    merged = run_concurrently(spark, {
+        **{label: functools.partial(upsert_nodes, spark, paths[label], df)
+           for label, df in g.nodes.items()},
+        "edges": merge_edges})
+    edges = merged.pop("edges")
 
-    # refresh the edge-derived counts on the merged tables
-    base = dict(merged)
+    # wave 2: the edge-derived count refreshes and the fulltext index.
+    # enrich_node_counts checkpoints the refreshed Work eagerly, so the
+    # wave shares only materialized blocks and the merged edges; each
+    # refreshed plan reads only its OWN table, and the index is built
+    # from the Work checkpoint, never from nodes_work, which the Work
+    # commit of this wave swaps.
     refresh_cols = {"Work": ["cited_by_count"],
                     "Author": ["works_count", "cited_by_count"],
                     "Source": ["works_count"],
                     "Publisher": ["works_count"]}
+    base = dict(merged)
     for label, cols in refresh_cols.items():
         base[label] = merged[label].drop(*cols)
     refreshed = enrich_node_counts(base, edges, linked=None)
-    for label in refresh_cols:
-        path = f"{root}/nodes_{label.lower()}"
-        # the refreshed plan reads only its OWN old table (+ edges +
-        # the eagerly checkpointed Work blocks), so per-label staged
-        # overwrites cannot read a path they just replaced
-        _staged_overwrite(refreshed[label], path)
-        merged[label] = spark.read.parquet(path)
-    for label in merged:
-        counts[label] = merged[label].count()
-
-    triples = build_triples(merged, edges)
-    _staged_overwrite(triples, f"{root}/triples", partition_by=["pred"])
-    counts["triples"] = spark.read.parquet(f"{root}/triples").count()
-
+    wave = {label: functools.partial(_overwrite_and_count, refreshed[label],
+                                     paths[label])
+            for label in refresh_cols}
     if with_search_indexes:
         from openalex_neo4j_spark.search import work_fulltext_index
 
-        _staged_overwrite(work_fulltext_index(merged["Work"]),
-                          f"{root}/index_fulltext")
-        counts["index_fulltext"] = spark.read.parquet(
-            f"{root}/index_fulltext").count()
+        wave["index_fulltext"] = functools.partial(
+            _overwrite_and_count, work_fulltext_index(refreshed["Work"]),
+            paths["index_fulltext"])
+    counts = run_concurrently(spark, wave)
+    for label in refresh_cols:
+        merged[label] = _read_back(refreshed[label], paths[label])
+
+    # wave 3: triples rebuilt from the merged state, and the counts of
+    # the tables wave 2 did not rewrite
+    triples = build_triples(merged, edges)
+    wave = {"triples": functools.partial(_overwrite_and_count, triples,
+                                         paths["triples"], ["pred"]),
+            "edges": edges.count}
+    wave.update({label: df.count for label, df in merged.items()
+                 if label not in counts})
+    counts.update(run_concurrently(spark, wave))
 
     from openalex_neo4j_spark.schemas import LINEAGE_SCHEMA
 
@@ -258,12 +304,12 @@ def merge_graph(g: GraphTables, root: str,
     return counts
 
 
-def _write(df: DataFrame, path: str, partition_by: list[str] | None = None) -> int:
+def _write(df: DataFrame, path: str,
+           partition_by: list[str] | None = None) -> None:
     w = df.write.mode("overwrite")
     if partition_by:
         w = w.partitionBy(*partition_by)
     w.parquet(path)
-    return -1  # caller counts from the written table to avoid recompute
 
 
 def write_bucketed(df: DataFrame, table: str, key: str,
@@ -305,64 +351,43 @@ def write_graph(g: GraphTables, root: str,
     creation (neo4j_client.py:134-144, 191-207; importer step 5). The
     search path then reads the stored index instead of rebuilding it
     per query.
+
+    Every table is written in ONE concurrent wave
+    (``session.run_concurrently``): the 7 node tables, edges, triples
+    and the index, each action counting its own table after its
+    write. A serial loop would pay ~10 driver-blocking actions of fixed
+    scheduler latency back to back. The wave is safe because:
+
+    - no job of it first-materializes a shared checkpoint: every node
+      table of a graph from ``pipeline.build_graph_from_linked`` is an
+      eagerly materialized checkpoint and edges are a staged parquet
+      scan, so the triples and index plans only read finished blocks
+      and files (a caller assembling ``GraphTables`` by other means
+      must hand over materialized node tables, or the wave can
+      deadlock the driver; see ``run_concurrently``);
+    - no action reads a path another one writes: the index is built
+      from ``g.nodes["Work"]``, whose id/title/abstract rows are the
+      ones written to ``nodes_work``, not from ``nodes_work`` itself.
     """
     spark = g.edges.sparkSession
-    counts: dict[str, int] = {}
     t0 = time.time()
-    # all tables are independent outputs of already-checkpointed plans:
-    # write them as concurrent jobs (a sequential loop serializes ~9
-    # driver-blocking actions whose fixed latency no core count can
-    # shrink); the counts afterwards read parquet footer metadata only
-    from concurrent.futures import ThreadPoolExecutor
-
-    # Pre-materialize every lazily-checkpointed node plan in ONE job
-    # before fanning out: Spark's RDD checkpoint machinery has a
-    # lock-order inversion — RDD.doCheckpoint takes the global
-    # RDDCheckpointData$ lock then the RDD's own lock, while the
-    # DAGScheduler's getCacheLocs/visit takes the RDD lock then (via
-    # RDD.checkpointRDD -> isCheckpointed) the global lock — so two
-    # concurrent jobs that share an UNMATERIALIZED localCheckpoint RDD
-    # can deadlock the driver (observed in CI: an action thread
-    # blocked in RDDCheckpointData.checkpoint against
-    # dag-scheduler-event-loop in getCacheLocs, both on the same node
-    # table; the suite hung for 35+ min on an idle machine). The
-    # triples plan references every node table, so the write fan-out
-    # below is exactly that race. ONE count over a superset-schema
-    # union of the node tables closes the window (each ckpt RDD is
-    # computed exactly once, all on this single action thread, and the
-    # union branches fill the cores concurrently) — a serial
-    # count-per-table loop paid 7 driver-blocking actions of fixed
-    # scheduler latency for the same materialization (round-4 verdict
-    # task 4); the expensive part — the 9 table writes — stays
-    # concurrent below.
-    from functools import reduce
-    reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True),
-           g.nodes.values()).count()
-
-    jobs = [(label, f"{root}/nodes_{label.lower()}", df, None)
-            for label, df in g.nodes.items()]
-    jobs.append(("edges", f"{root}/edges", g.edges, ["pred"]))
-    jobs.append(("triples", f"{root}/triples", g.triples, ["pred"]))
-
-    def _write_and_count(df: DataFrame, path: str, part) -> int:
-        # count INSIDE the worker thread: footer-metadata reads are
-        # cheap jobs, but nine of them in a serial post-write loop
-        # were nine more driver round-trips on the critical path
-        _write(df, path, partition_by=part)
-        return spark.read.parquet(path).count()
-
-    with ThreadPoolExecutor(max_workers=len(jobs)) as pool:
-        futs = [(key, pool.submit(_write_and_count, df, path, part))
-                for key, path, df, part in jobs]
-        for key, f in futs:
-            counts[key] = f.result()
+    tables = {label: (df, f"{root}/nodes_{label.lower()}", None)
+              for label, df in g.nodes.items()}
+    tables["edges"] = (g.edges, f"{root}/edges", ["pred"])
+    tables["triples"] = (g.triples, f"{root}/triples", ["pred"])
     if with_search_indexes:
         from openalex_neo4j_spark.search import work_fulltext_index
 
-        works_stored = spark.read.parquet(f"{root}/nodes_work")
-        _write(work_fulltext_index(works_stored), f"{root}/index_fulltext")
-        counts["index_fulltext"] = spark.read.parquet(
-            f"{root}/index_fulltext").count()
+        tables["index_fulltext"] = (work_fulltext_index(g.nodes["Work"]),
+                                    f"{root}/index_fulltext", None)
+
+    def write_and_count(df: DataFrame, path: str, part) -> int:
+        _write(df, path, partition_by=part)
+        return _read_back(df, path).count()
+
+    counts = run_concurrently(spark, {
+        key: functools.partial(write_and_count, *t)
+        for key, t in tables.items()})
 
     # lineage/metrics rows (north rule): one row per stage with wall
     # time and output counts

@@ -24,13 +24,15 @@ Scale notes:
 
 from __future__ import annotations
 
+import functools
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Window, functions as F
 
 from openalex_neo4j_spark.extract import mentions_from_pages
 from openalex_neo4j_spark.linking import link_mentions
-from openalex_neo4j_spark.session import ckpt, stage_parquet
+from openalex_neo4j_spark.session import (ckpt, run_concurrently,
+                                          stage_parquet)
 
 
 def camel_label_expr(col):
@@ -435,6 +437,8 @@ def build_graph(pages: DataFrame, skip_abstracts: bool = False,
     # slice, so it goes through stage_parquet below and every consumer
     # column-prunes its scan (a single assembly stage read 6.8GB of
     # row blocks for plans that needed ~1GB of columns).
+    # The parse plan has no exchange, so the lazy ckpt submits no job
+    # here: parsing runs inside linking's first job (session.ckpt).
     mentions = ckpt(mentions_from_pages(pages), eager=False)
     linked = link_mentions(mentions)
     if skip_abstracts:
@@ -482,11 +486,9 @@ def build_graph_from_linked(linked: DataFrame,
     # Work is checkpointed FIRST: the CITES endpoint semi-join, its own
     # count enrichment, and the Author citation rollup all reference it
     # — unmaterialized, the mention-table window dedup would execute
-    # 3-4x. The 7 enriched checkpoints are mutually independent, so
-    # they are submitted concurrently (a sequential loop serializes 7
-    # driver-blocking actions of fixed scheduler latency each — pure
-    # Amdahl in the N-vs-4N scaling bench; the scheduler interleaves
-    # the concurrent jobs across whatever cores exist).
+    # 3-4x. Its one consumer before the edge stage below materializes
+    # it is that stage's write, so the final stage can stay lazy (its
+    # aggregate's shuffle stage runs here under AQE; see session.ckpt).
     nodes["Work"] = ckpt(nodes["Work"], eager=False)
     # edges: COLUMNAR stage partitioned by pred, not row-block ckpt —
     # the table is re-read by 5+ consumers (four enrichment slices,
@@ -506,14 +508,17 @@ def build_graph_from_linked(linked: DataFrame,
     # already captured, so the CITES in-degree aggregation would
     # re-run once per downstream consumer (event-log evidence: the
     # edge scan appeared 5x when the enriched tables fanned out
-    # unmaterialized). The remaining six enriched tables are mutually
-    # independent: lazy ckpt (truncates the plan immediately, submits
-    # no job), materialized concurrently by the triples job's union
-    # branches.
+    # unmaterialized). The other six enriched tables share only that
+    # materialized Work checkpoint and the staged linked/edges
+    # parquet, so they are checkpointed EAGERLY as one concurrent wave:
+    # a lazy ckpt would still run their shuffle stages serially at call
+    # time (AQE), and every table of the returned graph is materialized,
+    # which is the precondition write_graph's and merge_graph's
+    # concurrent waves rely on.
     nodes = enrich_node_counts(nodes, edges, linked)
-    for label in nodes:
-        if label != "Work":
-            nodes[label] = ckpt(nodes[label], eager=False)
+    nodes.update(run_concurrently(linked.sparkSession, {
+        label: functools.partial(ckpt, df)
+        for label, df in nodes.items() if label != "Work"}))
     triples = build_triples(nodes, edges)
     return GraphTables(nodes=nodes, edges=edges, triples=triples,
                        mentions=linked)

@@ -9,8 +9,11 @@ cluster-ish value and AQE coalesces down at small SF.
 from __future__ import annotations
 
 import os
+from typing import Callable, TypeVar
 
 from pyspark.sql import SparkSession
+
+T = TypeVar("T")
 
 
 # Static engine configuration, shared by get_spark() and the
@@ -104,13 +107,21 @@ def ckpt(df, level: str | None = None, eager: bool = True):
     more than their GC footprint.
 
     ``eager=False`` truncates the plan immediately (the logical plan
-    becomes a LogicalRDD leaf either way) but folds materialization
-    into the first consuming job — one driver-blocking action saved
-    per call site. Lazy is ONLY safe when the first consuming job
-    references the plan once: concurrent first-materialization of a
-    multiply-referenced lazy checkpoint duplicates the compute (block
-    population is first-writer-wins, uncoordinated). Keep eager=True
-    where the first consumer is a self-join or a multi-slice union.
+    becomes a LogicalRDD leaf either way) but defers less than its
+    name says. Under AQE (``SPARK_CONF``) building the checkpoint RDD
+    finalizes the adaptive plan, which runs EVERY shuffle stage of it
+    at call time, serially on the calling thread; only the final,
+    exchange-free stage is folded into the first consuming job. So a
+    plan with an exchange (an aggregate, a join) costs its shuffle
+    jobs here either way, and only an exchange-free plan (the mention
+    parse: scan + Python map) submits no job at call time
+    (tests/test_plans.py pins both). Where the final stage is deferred,
+    lazy is ONLY safe when the first consuming job references the plan
+    once: concurrent first-materialization of a multiply-referenced
+    lazy checkpoint duplicates the compute (block population is
+    first-writer-wins, uncoordinated). Keep eager=True where the first
+    consumer is a self-join or a multi-slice union, and before any
+    :func:`run_concurrently` wave whose jobs share the plan.
     """
     import os as _os
 
@@ -119,6 +130,51 @@ def ckpt(df, level: str | None = None, eager: bool = True):
     name = level or _os.environ.get("SPARK_GRAFT_CKPT_LEVEL", "DISK_ONLY")
     return df.localCheckpoint(eager=eager,
                               storageLevel=getattr(StorageLevel, name))
+
+
+def run_concurrently(spark: SparkSession,
+                     actions: dict[str, Callable[[], T]]) -> dict[str, T]:
+    """Run independent driver-blocking actions as one concurrent wave;
+    return their results by key.
+
+    A serial loop of Spark actions pays each one's fixed scheduler and
+    AQE re-planning latency back to back, with idle cores in between;
+    submitted from one thread each, the jobs of a wave interleave
+    across whatever cores exist. Every action runs under
+    ``pyspark.inheritable_thread_target(spark)``, wrapped once per
+    action so that each thread gets its own copy of the caller's local
+    properties: a job group (or description, pool, tags) set by the
+    caller covers every job of the wave, and one thread's SQL
+    execution id never leaks into another's.
+
+    All actions run to completion, failed or not, before this returns
+    or raises; then the first failure in ``actions`` order is re-raised.
+    A commit in the wave is therefore never cut off half-way by a
+    sibling's error.
+
+    The caller guarantees the two conditions that make a wave safe:
+
+    - no checkpoint that two of its jobs share is unmaterialized.
+      Spark's RDD checkpointing takes the global ``RDDCheckpointData``
+      lock and the RDD's own lock in the opposite order from the
+      DAGScheduler's ``getCacheLocs``, so two concurrent jobs that
+      first-materialize one ``localCheckpoint`` can deadlock the
+      driver; checkpoint such plans eagerly (``ckpt``) first;
+    - no action reads a path that another action of the same wave
+      replaces.
+    """
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
+
+    # leaving the block waits for every action
+    with ThreadPoolExecutor(max_workers=len(actions)) as pool:
+        futs = {k: pool.submit(inheritable_thread_target(spark)(fn))
+                for k, fn in actions.items()}
+    for f in futs.values():
+        if f.exception() is not None:
+            raise f.exception()
+    return {k: f.result() for k, f in futs.items()}
 
 
 _STAGE_RUN_ROOTS: dict[str, str] = {}

@@ -8,6 +8,10 @@ here) and reports:
   task was running anywhere (scheduler latency, AQE re-planning,
   driver-side collects, Python driver work between actions)
 - the top-N individual gaps with the job ids they precede
+- every SQL execution (id, start offset, duration, job count) and how
+  many ran ALONE, with no execution of another root in flight at any
+  point: a serial commit shows as a run of lone executions, a
+  concurrent wave (``session.run_concurrently``) as overlapping ones
 
 Usage: python scripts/evlog_probe.py <event-log-file> [top_n]
 Prints one JSON line.
@@ -45,6 +49,24 @@ def _lines(path: str):
         yield from f
 
 
+def sql_executions(sql: dict[int, list], t0: float, t_end: float) -> dict:
+    """Per-execution rows, and how many executions overlapped no
+    execution of another root (an execution's nested children share
+    its root and do not count as concurrency)."""
+    # an execution still open at the log's end runs to its last job
+    spans = {eid: (root, lo, t_end if hi is None else hi, n_jobs)
+             for eid, (root, lo, hi, n_jobs) in sql.items()}
+    rows, alone = [], 0
+    for eid, (root, lo, hi, n_jobs) in sorted(spans.items()):
+        if not any(r != root and a < hi and lo < b
+                   for r, a, b, _ in spans.values()):
+            alone += 1
+        rows.append({"id": eid, "start": round(lo - t0, 3),
+                     "sec": round(hi - lo, 3), "jobs": n_jobs})
+    return {"sql_executions": len(rows), "sql_alone": alone,
+            "sql": rows}
+
+
 def probe(path: str, top_n: int = 10) -> dict:
     jobs = 0
     job_submit: dict[int, float] = {}
@@ -52,18 +74,31 @@ def probe(path: str, top_n: int = 10) -> dict:
     last_end = None
     intervals: list[tuple[float, float]] = []  # task (launch, finish)
     stages = 0
+    # SQL execution id -> [root id, start, end, jobs]
+    sql: dict[int, list] = {}
     if True:
         for line in _lines(path):
             try:
                 ev = json.loads(line)
             except json.JSONDecodeError:
                 continue
-            kind = ev.get("Event")
+            kind = ev.get("Event", "")
             if kind == "SparkListenerJobStart":
                 jobs += 1
                 t = ev["Submission Time"] / 1000.0
                 job_submit[ev["Job ID"]] = t
                 first_submit = t if first_submit is None else min(first_submit, t)
+                props = ev.get("Properties") or {}
+                eid = props.get("spark.sql.execution.id")
+                if eid is not None and int(eid) in sql:
+                    sql[int(eid)][3] += 1
+            elif kind.endswith(".SparkListenerSQLExecutionStart"):
+                eid = ev["executionId"]
+                sql[eid] = [ev.get("rootExecutionId", eid),
+                            ev["time"] / 1000.0, None, 0]
+            elif kind.endswith(".SparkListenerSQLExecutionEnd"):
+                if ev["executionId"] in sql:
+                    sql[ev["executionId"]][2] = ev["time"] / 1000.0
             elif kind == "SparkListenerJobEnd":
                 t = ev["Completion Time"] / 1000.0
                 last_end = t if last_end is None else max(last_end, t)
@@ -104,6 +139,7 @@ def probe(path: str, top_n: int = 10) -> dict:
         "gap_share": round(gap_total / wall, 3),
         "n_gaps_over_100ms": sum(1 for lo, hi in gaps if hi - lo > 0.1),
         "top_gaps": top,
+        **sql_executions(sql, first_submit, last_end),
     }
 
 

@@ -106,3 +106,84 @@ def test_merge_last_wins_on_node_props(spark, split_worlds,
     after = spark.read.parquet(f"{root}/nodes_work")
     assert after.filter(F.col("abstract").isNotNull()).count() == 0
     assert after.count() == n_before
+
+
+def _table_rows(spark, path):
+    from collections import Counter
+
+    df = spark.read.parquet(path)
+    return Counter(tuple(r) for r in df.select(sorted(df.columns)).collect())
+
+
+def test_failed_commit_waits_for_its_wave_and_rerun_converges(
+        spark, split_worlds, tmp_path_factory, monkeypatch):
+    """One commit of a merge wave raises: the error surfaces only after
+    the wave's other commits have finished, no later wave starts,
+    every table stays readable, and re-running the merge gives the
+    tables an uninterrupted merge gives."""
+    import os
+    import shutil
+    import time
+
+    import openalex_neo4j_spark.materialize as mat
+
+    p_a, p_b, _ = split_worlds
+    tmp = tmp_path_factory.mktemp("kg_merge_fail")
+    base, ref, failed = (str(tmp / d) for d in ("base", "ref", "failed"))
+    write_graph(build_graph(p_a), base)
+    shutil.copytree(base, ref)
+    shutil.copytree(base, failed)
+    g_b = build_graph(p_b)
+    merge_graph(g_b, ref)
+
+    real = mat._staged_overwrite
+    finished: dict[str, float] = {}
+
+    def edges_fail(df, path, partition_by=None):
+        if os.path.basename(path) == "edges":
+            raise RuntimeError("edge commit failed")
+        real(df, path, partition_by)
+        finished[os.path.basename(path)] = time.monotonic()
+
+    monkeypatch.setattr(mat, "_staged_overwrite", edges_fail)
+    with pytest.raises(RuntimeError, match="edge commit failed"):
+        merge_graph(g_b, failed)
+    raised = time.monotonic()
+    monkeypatch.undo()
+    # wave 1's node upserts all committed, before the error surfaced
+    assert set(finished) == {f"nodes_{lb.lower()}" for lb in g_b.nodes}
+    assert max(finished.values()) < raised
+    assert _table_rows(spark, f"{failed}/triples") == _table_rows(
+        spark, f"{base}/triples"), "a later wave ran after the failure"
+    for name in os.listdir(failed):
+        _table_rows(spark, f"{failed}/{name}")  # every table readable
+
+    merge_graph(g_b, failed)
+    tables = sorted(n for n in os.listdir(ref) if n != "lineage")
+    assert tables == sorted(n for n in os.listdir(failed) if n != "lineage")
+    for name in tables:
+        assert _table_rows(spark, f"{failed}/{name}") == _table_rows(
+            spark, f"{ref}/{name}"), name
+
+
+def test_caller_job_group_covers_every_commit_job(spark, split_worlds,
+                                                  tmp_path_factory):
+    """A job group set by the caller covers every job write_graph and
+    merge_graph submit, including those of their concurrent waves."""
+    p_a, p_b, _ = split_worlds
+    g_a, g_b = build_graph(p_a), build_graph(p_b)
+    root = str(tmp_path_factory.mktemp("kg_job_group"))
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    tracker = sc.statusTracker()
+    bus.waitUntilEmpty()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("kg-commit", "write and merge")
+    try:
+        write_graph(g_a, root, with_search_indexes=True)
+        merge_graph(g_b, root, with_search_indexes=True)
+    finally:
+        sc._jsc.clearJobGroup()
+    bus.waitUntilEmpty()
+    assert len(tracker.getJobIdsForGroup("kg-commit")) > 10
+    assert set(tracker.getJobIdsForGroup(None)) <= ungrouped

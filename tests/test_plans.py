@@ -135,6 +135,89 @@ def test_ckpt_storage_level_is_disk_only(spark):
     assert "Disk" in newest.storageLevel().description()
 
 
+def _jobs_submitted(spark, group: str, fn):
+    """(fn(), ids of the Spark jobs fn submitted), via a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, sc.statusTracker().getJobIdsForGroup(group)
+
+
+def test_lazy_ckpt_runs_shuffle_stages_at_call_time(spark, tmp_path):
+    """``ckpt(eager=False)`` under get_spark's config (AQE on) runs
+    every shuffle stage of its plan when it is CALLED; only an
+    exchange-free plan, such as the mention parse, submits no job until
+    its first consumer. Pinned so that a proposal to demote eager
+    checkpoints to lazy ones starts from the measured behaviour."""
+    from openalex_neo4j_spark.corpus import build_world, write_pages_parquet
+    from openalex_neo4j_spark.extract import mentions_from_pages
+    from openalex_neo4j_spark.session import ckpt
+
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+
+    def grouped():
+        return spark.range(1000).groupBy(
+            (F.col("id") % 7).alias("k")).count()
+
+    df, jobs = _jobs_submitted(spark, "lazy-ckpt-shuffle",
+                               lambda: ckpt(grouped(), eager=False))
+    assert len(jobs) >= 1, "AQE ran no shuffle stage at call time"
+    assert df.count() == 7
+
+    # the cause is AQE: without it the same call submits nothing
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        _, jobs = _jobs_submitted(spark, "lazy-ckpt-no-aqe",
+                                  lambda: ckpt(grouped(), eager=False))
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", "true")
+    assert jobs == []
+
+    path = str(tmp_path / "pages")
+    write_pages_parquet(build_world(10, seed=3), path, num_files=2)
+    pages = spark.read.parquet(path)
+    mentions, jobs = _jobs_submitted(
+        spark, "lazy-ckpt-parse",
+        lambda: ckpt(mentions_from_pages(pages), eager=False))
+    assert jobs == [], "the exchange-free parse must stay deferred"
+    assert mentions.count() > 0
+
+
+def test_run_concurrently_isolates_thread_properties(spark):
+    """Every action of a wave starts from the caller's local properties
+    (job group, description, ...) and sees only its own changes to
+    them: one shared copy would leak one thread's SQL execution id into
+    another's jobs. More actions than cores, and a short switch
+    interval, so that the threads interleave."""
+    import functools
+    import sys
+
+    from openalex_neo4j_spark.session import run_concurrently
+
+    sc = spark.sparkContext
+
+    def action(i):
+        seen = sc.getLocalProperty("wave.test")
+        sc.setLocalProperty("wave.test", f"a{i}")
+        spark.range(10).count()
+        return seen, sc.getLocalProperty("wave.test")
+
+    sc.setLocalProperty("wave.test", "caller")
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        got = run_concurrently(
+            spark, {f"a{i}": functools.partial(action, i) for i in range(16)})
+    finally:
+        sys.setswitchinterval(switch)
+        sc.setLocalProperty("wave.test", None)
+    assert got == {f"a{i}": ("caller", f"a{i}") for i in range(16)}
+
+
 def test_cluster_map_join_is_broadcast(spark, tmp_path):
     """The final mention->cluster_id map-back join in link_mentions
     must BROADCAST the (tid, cluster_id) map at in-cap group counts:

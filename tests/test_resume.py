@@ -233,3 +233,37 @@ def test_file_granular_chunk_plan_scans_only_chunk_files(spark, pages,
     bdf = spark.read.schema(stored.schema).parquet(*by_bucket[1])
     assert sorted(bdf.inputFiles()) == sorted(by_bucket[1])
     assert set(by_bucket[1]).isdisjoint(by_bucket[0])
+
+
+def test_read_lineage_missing_dir_is_empty(spark, tmp_path):
+    """No lineage yet (no directory, or one without data files) is an
+    empty frame with the lineage schema."""
+    from openalex_neo4j_spark.schemas import LINEAGE_SCHEMA
+
+    root = str(tmp_path / "fresh")
+    lin = read_lineage(spark, root)
+    assert lin.schema == LINEAGE_SCHEMA and lin.count() == 0
+    (tmp_path / "fresh" / "lineage").mkdir(parents=True)
+    assert read_lineage(spark, root).count() == 0
+    assert completed_partitions(spark, root, "extract") == set()
+
+
+def test_read_lineage_reraises_corrupt_table(spark, tmp_path):
+    """A lineage table that exists but cannot be read must raise, not
+    read as "no lineage": that would silently re-run every completed
+    stage."""
+    import os
+
+    from openalex_neo4j_spark.lineage import append_lineage
+
+    root = str(tmp_path / "run")
+    append_lineage(spark, root, [("extract", 0, None, 5, 1, "done", "r")])
+    assert completed_partitions(spark, root, "extract") == {0}
+    lin = os.path.join(root, "lineage")
+    for f in os.listdir(lin):
+        if f.endswith(".parquet"):
+            p = os.path.join(lin, f)
+            with open(p, "r+b") as fh:  # truncate: the footer is gone
+                fh.truncate(os.path.getsize(p) // 2)
+    with pytest.raises(Exception):
+        completed_partitions(spark, root, "extract")
